@@ -239,11 +239,8 @@ object Bench {
     val scanSplits =
       try Tables.lineitem(spark, sfDir).rdd.getNumPartitions
       catch { case _: Throwable => -1 }
-    val sessionFacts = Seq(
-      "master" -> ("\"" + spark.sparkContext.master + "\""),
-      "default_parallelism" -> spark.sparkContext.defaultParallelism.toString,
-      "scan_splits_largest" -> scanSplits.toString)
-    val line = renderLine(results, flaky.toSeq, calibMin, sfDir, sessionFacts)
+    val line = renderLine(results, flaky.toSeq, calibMin, sfDir, sessionFacts(
+      spark.sparkContext.master, spark.sparkContext.defaultParallelism, scanSplits))
     val outPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_OUT", "."), "bench.json")
     Files.writeString(outPath, line + "\n")
     // print the JSON first (before any shutdown noise), then the file path
@@ -251,6 +248,24 @@ object Bench {
     println(s"bench json written to: ${outPath.toAbsolutePath}")
     spark.stop()
   }
+
+  /** A JSON string literal: quotes, backslashes and control characters
+    * escaped. */
+  private def jq(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The session facts [[renderLine]] splices in, each value already
+    * rendered as JSON — `master` comes from the environment, so it goes
+    * through [[jq]] like every other string. */
+  def sessionFacts(master: String, defaultParallelism: Int,
+      scanSplits: Int): Seq[(String, String)] = Seq(
+    "master" -> jq(master),
+    "default_parallelism" -> defaultParallelism.toString,
+    "scan_splits_largest" -> scanSplits.toString)
 
   /** Render the one-line band-derivation JSON (pure; BenchRenderSpec).
     *
@@ -279,12 +294,6 @@ object Bench {
       anchor: Double, margin: Double, sfDir: String): String = {
     require(groupData.nonEmpty && groupData.forall(_.nonEmpty),
       "band derivation needs at least one group with at least one pass")
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and
     // a comma-decimal locale would render invalid JSON ("0,2500")
     def r4(d: Double): String =
@@ -333,12 +342,6 @@ object Bench {
   def renderLine(results: Seq[(String, Double, Option[String])],
       flaky: Seq[(String, Int)], calibMin: Double, sfDir: String,
       env: Seq[(String, String)] = Nil): String = {
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.sortBy { case (_, v, _) => v }
       .map { case (k, v, _) => jq(k) + ":" + v }
       .mkString("{", ",", "}")

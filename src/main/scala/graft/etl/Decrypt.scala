@@ -87,10 +87,15 @@ object Decrypt {
     encrypt(plaintext, key, iv)
   }
 
+  /** Decrypt calls made — lets the spec prove a batch of E encrypted
+    * events decrypts E times, not once per write the batch feeds. */
+  val decryptCount = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** AES-GCM-256 decrypt of base64(iv ‖ ct ‖ tag); None on auth failure
     * (the reference records failures in the per-row `error` column —
     * schema.ts:66 — rather than aborting the sync). */
-  def decrypt(payloadB64: String, key: Array[Byte]): Option[String] =
+  def decrypt(payloadB64: String, key: Array[Byte]): Option[String] = {
+    decryptCount.incrementAndGet()
     try {
       val all = Base64.getDecoder.decode(payloadB64)
       val iv = all.take(GcmIvBytes)
@@ -100,6 +105,7 @@ object Decrypt {
         new GCMParameterSpec(GcmTagBits, iv))
       Some(new String(cipher.doFinal(ct), StandardCharsets.UTF_8))
     } catch { case _: Exception => None }
+  }
 
   /** Closure-capturing decrypt UDF for the pipeline hot path: the
     * [[CryptoConfig]] ships to executors inside the task closure, NOT as

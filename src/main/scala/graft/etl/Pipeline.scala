@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end sync pipeline: the reference's E1/E2 lifecycle (SURVEY §3)
   * as one orchestration object.
@@ -17,7 +18,11 @@ import org.apache.spark.sql.functions._
   *    `is_encrypted` events in the hot path (T8, crypto.ts:181-224):
   *    successes land plaintext in `messages`, AES-GCM auth failures set
   *    the in-row error channel and the quarantine split routes them to
-  *    `logs` — they never reach the serving tables.
+  *    `logs` — they never reach the serving tables;
+  *  - each batch's derived frames are materialized once: the decrypted
+  *    message projection and the T4 participant projection each feed
+  *    several writes and probes, so each is persisted for the writes it
+  *    feeds and released at the end of them, also when one throws.
   */
 object Pipeline {
   /** Above this many distinct member rooms in one batch, the T4
@@ -25,6 +30,18 @@ object Pipeline {
     * of a per-bucket union: the driver-side room list stays bounded,
     * and a scan-all is the right plan for a batch that wide. */
   val MaxPrunedRooms = 4096
+
+  /** Run `f` over `df` persisted, and release it when `f` returns or
+    * throws. A micro-batch fans out into several writes and probes,
+    * each its own Spark action over the same lazy plan; without this
+    * every action re-reads, re-parses and re-decrypts the batch.
+    * MEMORY_AND_DISK, not a checkpoint: a lost block recomputes from
+    * the replayable file-source batch, and a failed batch leaves
+    * nothing cached, so its retry recomputes from source. */
+  private[etl] def persisted[T](df: DataFrame)(f: DataFrame => T): T = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally p.unpersist()
+  }
 }
 
 final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None) {
@@ -49,18 +66,47 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
         concat_ws(": ", col("event_id"), coalesce(col("error"), lit("quarantined")))
           .as("message")))
 
-  /** L2 input with the reference's NOT NULL membership rule applied:
-    * member events whose content yields no membership are rejected by
-    * the reference's insert (schema.ts:45), so here they go to `logs`
-    * — never as a silent "" into the participants merge. Returns the
-    * clean rows in the participants-table shape. `roomState` is the
-    * persisted participants snapshot for SDK-faithful duplicate-name
-    * disambiguation scope (None on backfill: the corpus IS the state). */
-  private def participantsGated(spark: SparkSession, raw: DataFrame,
-      roomState: Option[DataFrame] = None): DataFrame = {
-    val (ok, bad) = Ingest.quarantine(Ingest.projectParticipant(raw, roomState))
-    quarantineToLogs(spark, bad, tsCol = "last_updated")
-    ok.drop("event_id", "error")
+  /** L2 with the reference's NOT NULL membership rule applied: member
+    * events whose content yields no membership are rejected by the
+    * reference's insert (schema.ts:45), so here they go to `logs` —
+    * never as a silent "" into the participants merge. `roomState` is
+    * the persisted participants snapshot for SDK-faithful duplicate-name
+    * disambiguation scope (None on backfill: the corpus IS the state).
+    * The T4 projection is materialized once, before its quarantine
+    * split: the bad-row probe and append, the emptiness probe and the
+    * merge all read it. */
+  private def upsertParticipants(spark: SparkSession, raw: DataFrame,
+      roomState: Option[DataFrame]): Unit =
+    Pipeline.persisted(Ingest.projectParticipant(raw, roomState)) { projected =>
+      val (ok, bad) = Ingest.quarantine(projected)
+      quarantineToLogs(spark, bad, tsCol = "last_updated")
+      val members = ok.drop("event_id", "error")
+      if (!members.isEmpty)
+        catalog.upsert(spark, "participants", members,
+          keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"),
+          changeCols = Some(Seq("display_name", "avatar_url", "membership")))
+    }
+
+  /** The upserts one batch of raw events fans out into: decrypt (T8) →
+    * quarantine split → messages LWW-merge + dead letters to `logs`,
+    * then the participants and rooms change-detection merges. The
+    * decrypted message projection is materialized once and released
+    * before the participant writes; `roomState` is consulted after the
+    * messages merge. */
+  private def upsertEvents(spark: SparkSession, raw: DataFrame,
+      roomState: () => Option[DataFrame]): Unit = {
+    Pipeline.persisted(decrypted(spark, Ingest.messagesFromRaw(raw))) { messages =>
+      val (clean, quarantined) = Ingest.quarantine(messages)
+      catalog.upsert(spark, "messages", clean,
+        keys = Seq("event_id"), orderBy = Seq("timestamp", "id"))
+      quarantineToLogs(spark, quarantined)
+    }
+    upsertParticipants(spark, raw, roomState())
+    val rooms = Ingest.projectRooms(raw)
+    if (!rooms.isEmpty)
+      catalog.upsert(spark, "rooms", rooms,
+        keys = Seq("room_id"), orderBy = Seq("created_ts"),
+        changeCols = Some(Seq("name", "topic", "is_encrypted", "avatar_url")))
   }
 
   /** Source-boundary dead letters (unparseable JSON lines from
@@ -82,68 +128,44 @@ final case class Pipeline(catalog: Catalog, crypto: Option[CryptoConfig] = None)
     * short-circuits. */
   def backfillIfFirstRun(spark: SparkSession, raw: DataFrame): Boolean = {
     if (catalog.exists("messages")) return false
-    val messages = decrypted(spark, Ingest.messagesFromRaw(raw))
-    val (clean, quarantined) = Ingest.quarantine(messages)
-    catalog.upsert(spark, "messages", clean,
-      keys = Seq("event_id"), orderBy = Seq("timestamp", "id"))
-    quarantineToLogs(spark, quarantined)
-    val members = participantsGated(spark, raw)
-    if (!members.isEmpty)
-      catalog.upsert(spark, "participants", members,
-        keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"),
-        changeCols = Some(Seq("display_name", "avatar_url", "membership")))
-    val rooms = Ingest.projectRooms(raw)
-    if (!rooms.isEmpty)
-      catalog.upsert(spark, "rooms", rooms,
-        keys = Seq("room_id"), orderBy = Seq("created_ts"),
-        changeCols = Some(Seq("name", "topic", "is_encrypted", "avatar_url")))
+    upsertEvents(spark, raw, () => None)
     true
   }
 
-  /** Incremental micro-batch apply (the foreachBatch body of E2):
-    * decrypt → quarantine split → messages LWW-merge + participants/
-    * rooms change-detection merges + sync-token upsert (L8). */
-  def applyBatch(spark: SparkSession, raw: DataFrame, batchId: Long): Unit = {
-    val messages = decrypted(spark, Ingest.messagesFromRaw(raw))
-    val (clean, quarantined) = Ingest.quarantine(messages)
-    catalog.upsert(spark, "messages", clean,
-      keys = Seq("event_id"), orderBy = Seq("timestamp", "id"))
-    quarantineToLogs(spark, quarantined)
-    // T4 scope: disambiguate against live room state (the persisted
-    // snapshot ∪ this batch), as the SDK's calculateDisplayName does —
-    // not against the batch alone. The batch's member rooms are
-    // collected once (bounded by the micro-batch's own width, capped)
-    // and drive a bucket-pruned state read: a batch touching k rooms
-    // opens ≤ k buckets of the participants table, never the table. A
-    // batch with no member events skips the consult entirely; a
-    // pathologically wide batch (> MaxPrunedRooms distinct rooms) falls
-    // back to the full snapshot — the collect stays bounded either
-    // way, and at that width a scan-all is the better plan anyway.
+  /** T4 scope: disambiguate against live room state (the persisted
+    * snapshot ∪ this batch), as the SDK's calculateDisplayName does —
+    * not against the batch alone. The batch's member rooms are
+    * collected once (bounded by the micro-batch's own width, capped)
+    * and drive a bucket-pruned state read: a batch touching k rooms
+    * opens ≤ k buckets of the participants table, never the table. A
+    * batch with no member events skips the consult entirely; a
+    * pathologically wide batch (> MaxPrunedRooms distinct rooms) falls
+    * back to the full snapshot — the collect stays bounded either
+    * way, and at that width a scan-all is the better plan anyway. */
+  private def priorRoomState(spark: SparkSession, raw: DataFrame): Option[DataFrame] = {
     val memberRooms = raw.filter(col("event_type") === "m.room.member"
         && col("room_id").isNotNull)
       .select("room_id").distinct()
       .limit(Pipeline.MaxPrunedRooms + 1)
       .collect().map(_.getString(0)).toSeq
-    val prior =
-      if (memberRooms.isEmpty || !catalog.exists("participants")) None
-      else if (memberRooms.size > Pipeline.MaxPrunedRooms)
-        Some(catalog.read(spark, "participants"))
-      // room list is already on the driver: besides the bucket-level
-      // pruning, hand the scan the exact IN predicate so parquet
-      // row-group stats can prune co-bucketed rooms too (the
-      // projection's semi join then has nothing left to drop)
-      else Some(catalog.readForKeys(spark, "participants", memberRooms)
-        .filter(col("room_id").isin(memberRooms: _*)))
-    val members = participantsGated(spark, raw, prior)
-    if (!members.isEmpty)
-      catalog.upsert(spark, "participants", members,
-        keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"),
-        changeCols = Some(Seq("display_name", "avatar_url", "membership")))
-    val rooms = Ingest.projectRooms(raw)
-    if (!rooms.isEmpty)
-      catalog.upsert(spark, "rooms", rooms,
-        keys = Seq("room_id"), orderBy = Seq("created_ts"),
-        changeCols = Some(Seq("name", "topic", "is_encrypted", "avatar_url")))
+    if (memberRooms.isEmpty || !catalog.exists("participants")) None
+    else if (memberRooms.size > Pipeline.MaxPrunedRooms)
+      Some(catalog.read(spark, "participants"))
+    // room list is already on the driver: besides the bucket-level
+    // pruning, hand the scan the exact IN predicate so parquet
+    // row-group stats can prune co-bucketed rooms too (the
+    // projection's semi join then has nothing left to drop)
+    else Some(catalog.readForKeys(spark, "participants", memberRooms)
+      .filter(col("room_id").isin(memberRooms: _*)))
+  }
+
+  /** Incremental micro-batch apply (the foreachBatch body of E2):
+    * decrypt → quarantine split → messages LWW-merge + participants/
+    * rooms change-detection merges + sync-token upsert (L8). Each
+    * derived frame that feeds several writes exists once per batch and
+    * is released at batch end, also when a write throws. */
+  def applyBatch(spark: SparkSession, raw: DataFrame, batchId: Long): Unit = {
+    upsertEvents(spark, raw, () => priorRoomState(spark, raw))
     // L8: sync-token upsert — batch id plays the next_batch role.
     // Zero-padded so lexicographic order == numeric order (readers
     // tie-break on the token string when created_at collides).

@@ -17,6 +17,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    (db.utils.ts:271-290): resume-from-checkpoint reprocesses nothing,
   *    and a cold start with an existing snapshot is the reference's
   *    "token present ⇒ skip initial fetch" branch (client.ts:304-314);
+  *  - the full-ingest entries materialize each micro-batch once and
+  *    release it at batch end (see [[startFullIngest]]);
   *  - no watermark on the ingest path by design: the reference accepts
   *    late events forever and upserts them (SURVEY §2.7 late-data row).
   */
@@ -74,7 +76,11 @@ object Streaming {
     * persistRoom + updateSyncToken); here the foreachBatch body is
     * [[Pipeline.applyBatch]]: decrypt (T8) → quarantine→logs → messages
     * LWW-merge + participants/rooms change-detection merges → sync-token
-    * upsert (L8), all against one raw-event micro-batch.
+    * upsert (L8), all against one raw-event micro-batch. The batch is
+    * materialized once (persisted) for the whole body, so the writes it
+    * fans out into read it instead of re-reading the source files, and
+    * it is released at batch end — also when the body throws, so the
+    * retried batch recomputes from source.
     *
     * Storage maintenance runs on a batch cadence: every `maintainEvery`
     * batches, every catalog table is compacted (fold append stacks /
@@ -102,20 +108,23 @@ object Streaming {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch(fullIngestBody(pipeline, maintainEvery, keepVersions))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        Pipeline.persisted(batch)(
+          fullIngestBody(pipeline, maintainEvery, keepVersions, _, batchId))
+      }
       .start()
   }
 
   /** The shared E2 micro-batch body: applyBatch + maintenance cadence.
-    * Both full-ingest sources (parquet, JSONL) run exactly this, so the
-    * semantics specs for one hold for the other. */
+    * Both full-ingest sources (parquet, JSONL) run exactly this over a
+    * batch the caller has already persisted, so the semantics specs for
+    * one hold for the other. */
   private def fullIngestBody(pipeline: Pipeline, maintainEvery: Int,
-      keepVersions: Int): (DataFrame, Long) => Unit = { (batch, batchId) =>
+      keepVersions: Int, batch: DataFrame, batchId: Long): Unit = {
     val s = batch.sparkSession
     pipeline.applyBatch(s, batch, batchId)
     if (maintainEvery > 0 && batchId % maintainEvery == (maintainEvery - 1))
       pipeline.catalog.maintain(s, keepVersions)
-    ()
   }
 
   /** Blocking convenience: full-pipeline twin of [[runOnce]]. */
@@ -145,16 +154,20 @@ object Streaming {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(sourceDir)
 
-    val body = fullIngestBody(pipeline, maintainEvery, keepVersions)
     Ingest.rawFromJsonLines(lines).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.functions.col
-        pipeline.logCorrupt(batch.sparkSession,
-          batch.filter(col("event_type") === "m.graft.corrupt"))
-        body(batch.filter(col("event_type") =!= "m.graft.corrupt"), batchId)
+        // the lines are parsed once: both sides of the split read the
+        // persisted batch
+        Pipeline.persisted(batch) { parsed =>
+          pipeline.logCorrupt(parsed.sparkSession,
+            parsed.filter(col("event_type") === "m.graft.corrupt"))
+          fullIngestBody(pipeline, maintainEvery, keepVersions,
+            parsed.filter(col("event_type") =!= "m.graft.corrupt"), batchId)
+        }
       }
       .start()
   }

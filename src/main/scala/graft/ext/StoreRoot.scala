@@ -33,13 +33,25 @@ private[ext] object StoreRoot {
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Local path of one `inputFiles` entry. Spark lists encoded URIs
+    * (a space arrives as `%20`), which only a URI parse decodes — a
+    * Hadoop Path would keep `%20` literally. A raw string with an
+    * unencoded space is not a legal URI; Hadoop's Path parses that. */
+  private[ext] def localPath(f: String): java.nio.file.Path = Paths.get(
+    try new java.net.URI(f).getPath
+    catch { case _: java.net.URISyntaxException =>
+      new org.apache.hadoop.fs.Path(f).toUri.getPath })
+
   /** Cheap, job-free identity of the table's source files: sorted
-    * `path|size|mtimeMs` lines. Listing only — never reads data. */
-  private def sourceMeta(df: DataFrame): String =
-    df.inputFiles.sorted.map { f =>
-      val p = Paths.get(new java.net.URI(f).getPath)
+    * `path|size|mtimeMs` lines. Listing only — never reads data. None
+    * when a listed file is gone by the time it is stat'ed: the caller
+    * then falls back to the full fingerprint scan. */
+  private[ext] def sourceMeta(df: DataFrame): Option[String] =
+    try Some(df.inputFiles.sorted.map { f =>
+      val p = localPath(f)
       s"$f|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-    }.mkString("\n")
+    }.mkString("\n"))
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   def resolve(s: SparkSession, dir: String, envKey: String,
       defaultSubdir: String, table: (SparkSession, String) => DataFrame,
@@ -47,29 +59,42 @@ private[ext] object StoreRoot {
     memo.computeIfAbsent(s"$envKey|$dir", _ => {
       val parent = sys.env.getOrElse(envKey,
         new java.io.File(sys.props("user.dir"), s"target/$defaultSubdir").getPath)
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val df = table(s, dir)
-      val meta = sourceMeta(df)
-      val manifest = Paths.get(parent, s"$md.manifest")
-      val recorded =
-        if (Files.exists(manifest)) {
-          val lines = new String(Files.readAllBytes(manifest),
-            StandardCharsets.UTF_8).split("\n::\n", 2)
-          if (lines.length == 2 && lines(0) == meta) Some(lines(1).trim) else None
-        } else None
-      val suffix = recorded.getOrElse {
-        val r = df.agg(count(lit(1)), max(col(idCol)),
-          expr(s"bit_xor(xxhash64($idCol, $contentCol))")).collect()(0)
-        val sfx =
-          s"$md-n${r.getLong(0)}-m${r.getLong(1)}-x${java.lang.Long.toHexString(r.getLong(2))}"
+      resolveUnder(s, parent, dir, table, idCol, contentCol)
+    })
+
+  /** [[resolve]] without the per-JVM memo: the store root for `dir`
+    * under `parent`, from the manifest when the source metadata still
+    * matches it, else from a full fingerprint scan (which rewrites the
+    * manifest whenever the metadata could be read). */
+  private[ext] def resolveUnder(s: SparkSession, parent: String, dir: String,
+      table: (SparkSession, String) => DataFrame,
+      idCol: String, contentCol: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val df = table(s, dir)
+    val meta = sourceMeta(df)
+    val manifest = Paths.get(parent, s"$md.manifest")
+    val recorded = meta.flatMap { m =>
+      if (Files.exists(manifest)) {
+        val lines = new String(Files.readAllBytes(manifest),
+          StandardCharsets.UTF_8).split("\n::\n", 2)
+        if (lines.length == 2 && lines(0) == m) Some(lines(1).trim) else None
+      } else None
+    }
+    val suffix = recorded.getOrElse {
+      val r = df.agg(count(lit(1)), max(col(idCol)),
+        expr(s"bit_xor(xxhash64($idCol, $contentCol))")).collect()(0)
+      val sfx =
+        s"$md-n${r.getLong(0)}-m${r.getLong(1)}-x${java.lang.Long.toHexString(r.getLong(2))}"
+      meta.foreach { m =>
         Files.createDirectories(Paths.get(parent))
         val tmp = Files.createTempFile(Paths.get(parent), s"$md", ".manifest.tmp")
-        Files.write(tmp, s"$meta\n::\n$sfx\n".getBytes(StandardCharsets.UTF_8))
+        Files.write(tmp, s"$m\n::\n$sfx\n".getBytes(StandardCharsets.UTF_8))
         Files.move(tmp, manifest, StandardCopyOption.REPLACE_EXISTING,
           StandardCopyOption.ATOMIC_MOVE)
-        sfx
       }
-      s"$parent/$suffix"
-    })
+      sfx
+    }
+    s"$parent/$suffix"
+  }
 }

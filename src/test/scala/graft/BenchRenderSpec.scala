@@ -63,6 +63,15 @@ class BenchRenderSpec extends AnyFunSuite {
       Bench.renderLine(results, Nil, 0.25, "/sf", Nil))
   }
 
+  test("a quote and a backslash in master are escaped: the line still parses as JSON") {
+    val master = "local[\"4\"]\\x"
+    val l = Bench.renderLine(results, Nil, 0.25, "/sf", Bench.sessionFacts(master, 4, 1))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(l)
+    assert(tree.get("master").asText == master, l)
+    assert(tree.get("default_parallelism").asInt == 4, l)
+    assert(tree.get("sf").asText == "/sf", l)
+  }
+
   test("renderBandLine: per-group minima envelope, uniform run-calib rescale, one-line JSON") {
     // two groups of two passes; run calib = min over ALL passes = 0.25.
     // Anchor 0.50 → ONE uniform factor 0.50/0.25 = 2 for everything

@@ -211,6 +211,30 @@ class PipelineSpec extends AnyFunSuite {
       "key derivation must be cached across rows and batches")
   }
 
+  test("T8 runs once per encrypted event: one applyBatch with E encrypted events decrypts E times") {
+    val cat = Catalog(Files.createTempDirectory("graft-pipe-t8once").toString)
+    cat.bootstrap()
+    val crypto = CryptoConfig("pipe-pass-once", java.util.Base64.getEncoder
+      .encodeToString("pipe-salt-once".getBytes), 1000)
+    val key = Decrypt.deriveKey("pipe-pass-once", "pipe-salt-once".getBytes, 1000)
+    def enc(id: Int, ts: Long, payload: String): Row =
+      Row(s"$$once$id:x", s"!r${id % 3}:x", "@alice:x", "m.room.message", ts,
+        payload, null, true, false, null)
+    val good = (0 until 12).map(i =>
+      enc(i, 100L + i, Decrypt.encryptRandomIv(s"""{"body":"s$i"}""", key)))
+    // a failed decrypt counts too: it feeds the quarantine probe and the
+    // logs append, the writes that used to re-run the UDF
+    val bad = enc(99, 999L, "bm90IGEgcGF5bG9hZA==")
+    val plain = (0 until 5).map(i => msg(200 + i, "!r1:x", "@bob:x", 300L + i))
+    val batch = raw(good ++ plain :+ bad)
+    val before = Decrypt.decryptCount.get()
+    Pipeline(cat, Some(crypto)).applyBatch(spark, batch, batchId = 1L)
+    assert(Decrypt.decryptCount.get() - before == good.size + 1,
+      "each encrypted event must be decrypted exactly once per batch")
+    assert(cat.read(spark, "messages").count() == good.size + plain.size)
+    assert(cat.read(spark, "logs").filter(col("message").contains("$once99:x")).count() == 1)
+  }
+
   test("T4 roomState scope: incremental disambiguation consults persisted participants") {
     // matrix-js-sdk's calculateDisplayName decides collisions against
     // live roomState, not against whatever happens to share a sync

@@ -105,6 +105,7 @@ class QueriesSpec extends AnyFunSuite {
       "sim_ivfpq_recall_audit", // that probe panel + the 10-row query panel for the exact-L2 truth side
       "sim_ivfpq_recall_structured", // planted-centroid panels + the 10-row query panel (the control)
       "pipe_corpus_funnel",  // six 1-row funnel-count panels cross-joined (the api_q6_stats shape)
+      "qa_profile",          // seven 1-row aggregate panels cross-joined (the pipe_corpus_funnel shape, Profile.scala)
       "txt_tfidf_top")       // 1-row corpus-count broadcast (the api_q6_stats shape)
     val violations = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       val plan = fn(spark, sf).queryExecution.executedPlan.toString

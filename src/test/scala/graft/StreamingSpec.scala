@@ -269,6 +269,60 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("batches are released at batch end: a JSONL drain and a failing applyBatch leave nothing persisted") {
+    import graft.etl.{Catalog, Pipeline}
+    // other suites' reuse barriers may share this SparkContext: compare
+    // against what was persisted before, not against an empty set
+    def leftPersisted(before: Set[Int]) =
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val base = Files.createTempDirectory("graft-release")
+    val src = base.resolve("src")
+    Files.createDirectories(src)
+    val member =
+      """{"event_id":"$mem1:x","room_id":"!room0:x","sender":"@u0:x","event_type":"m.room.member","origin_server_ts":5,"content":"{\"displayname\":\"U\",\"membership\":\"join\"}"}"""
+    Files.write(src.resolve("b1.jsonl"), (rawRows(0 until 20, 1000L).toJSON.collect() ++
+      Seq(member, "not json")).mkString("\n").getBytes)
+    val cat = Catalog(base.resolve("cat").toString, messageBuckets = 4)
+    cat.bootstrap()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Streaming.startFullIngestJsonl(spark, src.toString, base.resolve("ckpt").toString,
+      Pipeline(cat)).awaitTermination()
+    assert(cat.read(spark, "messages").count() == 20)
+    assert(cat.read(spark, "participants").count() == 1)
+    assert(cat.read(spark, "logs").count() == 1, "the corrupt line is logged")
+    assert(leftPersisted(before).isEmpty, "a drained batch must not stay persisted")
+
+    // the same stream over a catalog opened with the wrong bucket count:
+    // the batch is materialized by the corrupt-line split, then the
+    // messages merge fails its layout check inside applyBatch
+    Files.write(src.resolve("b2.jsonl"),
+      (rawRows(20 until 30, 2000L).toJSON.collect() :+ "still not json").mkString("\n").getBytes)
+    val wrong = Catalog(cat.root, messageBuckets = 8)
+    val e1 = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Streaming.startFullIngestJsonl(spark, src.toString, base.resolve("ckpt").toString,
+        Pipeline(wrong)).awaitTermination())
+    assert(e1.getCause.getMessage.contains("bucketed"), e1.getCause.getMessage)
+    assert(leftPersisted(before).isEmpty, "a failed batch must release its persisted batch")
+
+    // a direct applyBatch that fails inside the participants merge,
+    // after the T4 projection has been materialized: participants exist
+    // at 4 buckets, the catalog expects 8, and a batch wider than
+    // MaxPrunedRooms consults the full snapshot (no layout check) first
+    val other = Catalog(base.resolve("cat2").toString, messageBuckets = 4)
+    other.bootstrap()
+    other.upsert(spark, "participants", cat.read(spark, "participants"),
+      keys = Seq("user_id", "room_id"), orderBy = Seq("joined_ts"))
+    val wide = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 to Pipeline.MaxPrunedRooms).map(i => Row(s"$$w$i:x", s"!w$i:x", s"@w$i:x",
+        "m.room.member", 10L, """{"membership":"join"}""", null, false, false, null)), 2),
+      Schemas.rawEvent)
+    val e2 = intercept[IllegalArgumentException](
+      Pipeline(Catalog(other.root, messageBuckets = 8)).applyBatch(spark, wide, 1L))
+    assert(e2.getMessage.contains("participants is bucketed"), e2.getMessage)
+    assert(leftPersisted(before).isEmpty,
+      "frames materialized before the failure must be released too")
+  }
+
   test("quarantine split routes error rows") {
     val raw = rawRows(0 until 10, 0L)
     val msgs = Ingest.messagesFromRaw(raw)
